@@ -29,6 +29,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     }
     e.injectOptimizerRule(_ => graft.plans.RangeJoinRule)
     e.injectPlannerStrategy(_ => graft.plans.AsofJoinStrategy)
+    e.injectPlannerStrategy(_ => graft.plans.RowNumberStrategy)
     // The graftstore SQL front door (Delta's DeltaSqlParser/DeltaAnalysis
     // architecture): the parser adds the maintenance verbs (OPTIMIZE /
     // VACUUM / DESCRIBE HISTORY), the post-hoc rule routes the
@@ -201,6 +202,14 @@ object GraftFunctions {
       tableRegistry.registerFunction(FunctionIdentifier(name), info, builder)
     }
   }
+
+  /** Install a planner strategy into an already-running session,
+    * idempotently (the live-session twin of [[GraftExtensions]]'s
+    * injectPlannerStrategy). */
+  def installStrategy(spark: SparkSession,
+                      strategy: org.apache.spark.sql.execution.SparkStrategy): Unit =
+    if (!spark.experimental.extraStrategies.contains(strategy))
+      spark.experimental.extraStrategies :+= strategy
 
   /** Install the optimizer rewrites into an already-running session (the
     * live-session twin of [[GraftExtensions]]'s injectOptimizerRule). */

@@ -775,7 +775,7 @@ object SparkEntry {
     "dsir_select" -> ((s, dir) =>
       Sampling.dsirSelect(Tables.documents(s, dir), col("source") === "src0")),
     // Best-tokens-under-budget: quality-ranked greedy selection with a
-    // distributed global running sum (range partition + broadcast
+    // distributed global running sum (range partition + per-partition
     // offsets — never a single-partition window).
     "budget_select" -> ((s, dir) =>
       Sampling.budgetSelect(Tables.documents(s, dir))),
@@ -1591,7 +1591,7 @@ object SparkEntry {
     val s = fact.sparkSession
     val default = s.sessionState.conf.filesMaxPartitionBytes *
       math.max(s.sparkContext.defaultParallelism, 1).toLong
-    val threshold = s.conf.get("spark.graft.bloom.minApplyBytes", default.toString).toLong
+    val threshold = GraftConf.long(s, "spark.graft.bloom.minApplyBytes", default)
     fact.queryExecution.analyzed.stats.sizeInBytes >= BigInt(threshold)
   }
 
@@ -1703,13 +1703,6 @@ object SparkEntry {
     p
   }
 
-  /** Build (once per corpus) the post-UPDATE VersionedStore of events:
-    * the same 10 day-ranged appends as [[ensureVersionedEventsStore]],
-    * then `UPDATE SET value = value * 3 WHERE event_type = 'click' AND
-    * day = 2024-01-14` with the day prune VERIFIED (`verifyPrune` —
-    * the probe sweeps every dir in one job and would fail loudly if the
-    * prune assertion excluded a matching dir). The require gates the
-    * copy-on-write bound: exactly one of the ten dirs rewrites. */
   /** 10 day-ranged appends of events + a HASH-DISTRIBUTED lookup key
     * (eid_h = md5(event_id)) recorded as a `bloom:` stats column. Every
     * dir's [min, max] on eid_h spans ~the whole hex domain — range stats
@@ -1735,6 +1728,13 @@ object SparkEntry {
     p
   }
 
+  /** Build (once per corpus) the post-UPDATE VersionedStore of events:
+    * the same 10 day-ranged appends as [[ensureVersionedEventsStore]],
+    * then `UPDATE SET value = value * 3 WHERE event_type = 'click' AND
+    * day = 2024-01-14` with the day prune VERIFIED (`verifyPrune` —
+    * the probe sweeps every dir in one job and would fail loudly if the
+    * prune assertion excluded a matching dir). The require gates the
+    * copy-on-write bound: exactly one of the ten dirs rewrites. */
   private def ensureUpdatedEventsStore(s: SparkSession, dir: String): String = {
     import graft.sinks.{ArtifactStore, VersionedStore}
     val p = artifactPath("vstore_events_upd", dir)

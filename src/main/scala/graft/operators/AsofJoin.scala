@@ -81,7 +81,7 @@ object AsofJoin {
     require(valueCols.intersect(left.columns.toSeq).isEmpty,
       s"value columns ${valueCols.intersect(left.columns.toSeq).mkString(",")} clash with left columns")
     val spark = left.sparkSession
-    graft.plans.AsofJoinStrategy.install(spark)
+    graft.GraftFunctions.installStrategy(spark, graft.plans.AsofJoinStrategy)
     val rFresh = right.select(
       (key +: rightTs +: valueCols.toList).map(c => col(c).as(c + "__r")): _*)
     val lPlan = left.queryExecution.analyzed

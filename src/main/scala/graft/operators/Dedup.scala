@@ -314,7 +314,7 @@ object Dedup {
     // the loop's partitioner from the MEASURED edge count — tiny graphs
     // collapse to one partition, a 100 TB graph keeps full parallelism:
     // scale-adaptive, not a local[32] constant (guide §2.2).
-    val perTask = spark.conf.get("spark.graft.cc.edgesPerTask", "65536").toLong
+    val perTask = graft.GraftConf.long(spark, "spark.graft.cc.edgesPerTask", 65536L)
     val width = math.min(spark.sparkContext.defaultParallelism.toLong,
       math.max(1L, (sym.count() + perTask - 1) / perTask)).toInt
     val part = new org.apache.spark.HashPartitioner(width)
@@ -407,7 +407,7 @@ object Dedup {
       .persist(lvl)
     // Materialize the pair-detection output once; size the loop's
     // partitioner from the measured pair count (guide §2.2).
-    val perTask = spark.conf.get("spark.graft.cc.edgesPerTask", "65536").toLong
+    val perTask = graft.GraftConf.long(spark, "spark.graft.cc.edgesPerTask", 65536L)
     val width = math.min(spark.sparkContext.defaultParallelism.toLong,
       math.max(1L, (raw.count() + perTask - 1) / perTask)).toInt
     val part = new org.apache.spark.HashPartitioner(width)

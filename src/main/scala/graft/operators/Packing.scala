@@ -59,7 +59,7 @@ object Packing {
     * longest member, so batching RANDOM lengths wastes compute on pad
     * tokens; batching near-equal lengths doesn't. Documents are ranked
     * globally by token count ([[RankUtils.globalRowNumber]] — range
-    * partition + broadcast offsets, never a single-partition window),
+    * partition + per-partition offsets, never a single-partition window),
     * split into `nBuckets` equal-rank ranges, and each bucket is cut into
     * fixed-`batchSize` batches of adjacent-length docs. One row per batch
     * with its padding metrics. All bucket/batch arithmetic is exact

@@ -1,121 +1,40 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{Column, DataFrame, GraftColumnBridge}
+import org.apache.spark.sql.catalyst.expressions.AttributeReference
+import org.apache.spark.sql.catalyst.plans.logical.Sort
+import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.sql.types.LongType
 
-/** Distributed global ranking.
-  *
-  * `row_number().over(Window.orderBy(...))` moves the whole input to ONE
-  * partition — fine behind a top-K limit, fatal on an unbounded row set at
-  * cluster scale. This is the classic scalable alternative:
-  *
-  *   1. range-repartition on the (total) sort order,
-  *   2. rank within each partition (distributed windows),
-  *   3. add per-partition offsets (a tiny count aggregate, broadcast).
-  *
-  * The result is identical to the single-partition window for any total
-  * order (ranks depend only on the global order, not on where Spark draws
-  * the range boundaries), which the oracle gate and `RankUtilsSpec`
-  * verify.
-  */
+/** Ranking in one ordered pass ([[graft.plans.RowNumberExec]]), for windows
+  * whose parallelism is 1 (`Window.orderBy`) or |groups| (`partitionBy`):
+  * here it is the range-partition count. Results equal the windows' when
+  * `order` is total within a group (include a unique tiebreak key). */
 object RankUtils {
+  /** Append `rankCol` = 1-based global row number under `order`. */
+  def globalRowNumber(df: DataFrame, order: Seq[Column], rankCol: String): DataFrame =
+    ordered(df, Nil, order, lit(1L), rankCol)
 
-  /** Append `rankCol` = 1-based global row number under `order` (must be a
-    * TOTAL order — include a unique tiebreak key). */
-  def globalRowNumber(df: DataFrame, order: Seq[Column], rankCol: String,
-                      partitions: Int = 0): DataFrame = {
-    val ranged =
-      (if (partitions > 0) df.repartitionByRange(partitions, order: _*)
-       else df.repartitionByRange(order: _*))
-        .withColumn("__pid", spark_partition_id())
-    val perPart = Window.partitionBy(col("__pid")).orderBy(order: _*)
-    val offsets = ranged
-      .groupBy("__pid").agg(count(lit(1)).as("__n"))
-      .withColumn("__offset",
-        coalesce(sum(col("__n")).over(
-          Window.orderBy(col("__pid")).rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select("__pid", "__offset")
-    ranged
-      .withColumn("__rn", row_number().over(perPart).cast("long"))
-      .join(broadcast(offsets), Seq("__pid"))
-      .withColumn(rankCol, col("__rn") + col("__offset"))
-      .drop("__pid", "__rn", "__offset")
-  }
-
-  /** Append `sumCol` = running sum of `value` under `order`, INCLUSIVE of
-    * the current row — the distributed global prefix sum, same two-pass
-    * shape as [[globalRowNumber]] (range-repartition on the total order,
-    * per-partition window prefix sums, broadcast per-partition offsets).
-    * A `sum(value).over(Window.orderBy(...))` computes the identical
-    * column on one partition; this form's parallelism is the partition
-    * count. `value` must be non-null; `order` must be total. */
+  /** Append `sumCol` = inclusive running sum of integral `value` (NULL adds 0). */
   def globalRunningSum(df: DataFrame, order: Seq[Column], value: Column,
-                       sumCol: String, partitions: Int = 0): DataFrame = {
-    val ranged =
-      (if (partitions > 0) df.repartitionByRange(partitions, order: _*)
-       else df.repartitionByRange(order: _*))
-        .withColumn("__pid", spark_partition_id())
-        .withColumn("__v", value)
-    val perPart = Window.partitionBy(col("__pid")).orderBy(order: _*)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val offsets = ranged
-      .groupBy("__pid").agg(sum(col("__v")).as("__n"))
-      .withColumn("__offset",
-        coalesce(sum(col("__n")).over(
-          Window.orderBy(col("__pid")).rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select("__pid", "__offset")
-    ranged
-      .withColumn("__rs", sum(col("__v")).over(perPart))
-      .join(broadcast(offsets), Seq("__pid"))
-      .withColumn(sumCol, col("__rs") + col("__offset"))
-      .drop("__pid", "__rs", "__offset", "__v")
-  }
+                       sumCol: String): DataFrame =
+    ordered(df, Nil, order, value, sumCol)
 
-  /** Grouped variant: `rankCol` = 1-based row number under `order` WITHIN
-    * each `groupCols` group — the scale-correct replacement for
-    * `row_number().over(Window.partitionBy(groupCols).orderBy(order))`,
-    * whose parallelism is |groups| (five categories ⇒ five tasks, each
-    * sorting |rows|/5 — a skewed single-reducer in disguise at 100×).
-    *
-    * Construction: range-partition on (groupCols ++ order) — a group's rows
-    * are contiguous across the partition sequence and sorted within it —
-    * rank inside each (partition, group) cell with a distributed window,
-    * then add per-(group, partition) offsets (the count of the group's rows
-    * in EARLIER partitions; a tiny aggregate, broadcast back). Parallelism
-    * is the partition count, independent of |groups|. `order` must be a
-    * total order within a group (include a unique tiebreak key). */
+  /** Append `rankCol` = 1-based row number per group (a NULL key is a group). */
   def groupedRowNumber(df: DataFrame, groupCols: Seq[String], order: Seq[Column],
-                       rankCol: String, partitions: Int = 0): DataFrame = {
-    val gc = groupCols.map(col)
-    val full = gc ++ order
-    val ranged =
-      (if (partitions > 0) df.repartitionByRange(partitions, full: _*)
-       else df.repartitionByRange(full: _*))
-        .withColumn("__pid", spark_partition_id())
-    val perCell = Window.partitionBy(col("__pid") +: gc: _*).orderBy(order: _*)
-    // Offsets frame: |groups| × |partitions| rows — the cumsum window below
-    // runs over THIS frame (bounded), never over the data.
-    // Offset keys are renamed and joined NULL-SAFELY (<=>): a NULL group
-    // key is a legitimate stratum for the window formulation this replaces
-    // (Window.partitionBy puts NULLs in their own partition), and a
-    // null-unsafe equi-join would silently DROP every NULL-group row.
-    val offsets = ranged
-      .groupBy(col("__pid") +: gc: _*).agg(count(lit(1)).as("__n"))
-      .withColumn("__offset",
-        coalesce(sum(col("__n")).over(
-          Window.partitionBy(gc: _*).orderBy(col("__pid"))
-            .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select(col("__pid").as("__opid") +:
-        groupCols.zipWithIndex.map { case (c, i) => col(c).as(s"__og$i") } :+
-        col("__offset"): _*)
-    val joinCond = (col("__pid") === col("__opid")) +:
-      groupCols.zipWithIndex.map { case (c, i) => col(c) <=> col(s"__og$i") }
-    ranged
-      .withColumn("__rn", row_number().over(perCell).cast("long"))
-      .join(broadcast(offsets), joinCond.reduce(_ && _))
-      .withColumn(rankCol, col("__rn") + col("__offset"))
-      .drop("__pid" +: "__rn" +: "__offset" +: "__opid" +:
-        groupCols.indices.map(i => s"__og$i"): _*)
+                       rankCol: String): DataFrame =
+    ordered(df, groupCols.map(col), order, lit(1L), rankCol)
+
+  private def ordered(df: DataFrame, groups: Seq[Column], order: Seq[Column],
+                      value: Column, outCol: String): DataFrame = {
+    val Sort(sortOrder, _, child, _) =
+      df.drop(outCol).sort(groups.map(_.asc) ++ order: _*).queryExecution.analyzed
+    graft.GraftFunctions.installStrategy(df.sparkSession, graft.plans.RowNumberStrategy)
+    // Re-aliased, as in asofJoinNative: the analyzer cannot renew a custom
+    // node's attribute, so a self-join of the bare node's output conflicts.
+    GraftColumnBridge.ofRows(df.sparkSession, graft.plans.RowNumberNode(sortOrder, groups.size,
+      GraftColumnBridge.parsedExpression(value.cast("long")),
+      AttributeReference(outCol, LongType, nullable = false)(), child))
+      .withColumn(outCol, col(outCol))
   }
 }

@@ -138,8 +138,7 @@ object Sampling {
       .withColumn("rem", expr(s"($total * w) % z"))
     val base = alloc.agg(sum(col("q0")).as("base"))
     // Largest-remainder top-up: the window spans |langs| rows (bounded by
-    // construction — the cardinality-bounded grouping key), like
-    // RankUtils' internal offsets windows.
+    // construction — the cardinality-bounded grouping key).
     val byRem = org.apache.spark.sql.expressions.Window
       .orderBy(col("rem").desc, col("lang").asc)
     val quotas = alloc.crossJoin(broadcast(base))
@@ -225,7 +224,7 @@ object Sampling {
     * within budget. NULL-quality (degenerate empty) docs are excluded.
     *
     * Scale shape: the running total is [[RankUtils.globalRunningSum]] —
-    * range partition + broadcast offsets, never a single-partition
+    * range partition + per-partition offsets, never a single-partition
     * window; the cut is a per-row filter on the summed column. */
   def budgetSelect(docs: DataFrame, tokenBudget: Long = 10000): DataFrame = {
     val scored = TextAnalysis.textStats(docs)

@@ -779,7 +779,7 @@ object Similarity {
     * reproducible on any partitioning.
     *
     * Scale shape: the IVF model's broadcast-argmin assignment, then the
-    * grouped distributed rank (range partition + broadcast offsets — no
+    * grouped distributed rank (range partition + per-partition offsets — no
     * per-cluster window straggler when one cluster holds half the
     * corpus, which is exactly the skew this operator exists to correct). */
   def clusterBalancedSample(embeddings: DataFrame, perCluster: Int = 20,

@@ -73,14 +73,8 @@ object SkewUtils {
     val size = df.queryExecution.analyzed.stats.sizeInBytes
     if (size >= BigInt(maxSplit) * math.max(target - 1, 1)) df
     else {
-      val confVal = df.sparkSession.conf
-        .get("spark.graft.spread.bytesPerTask", perTaskBytes.toString)
-      val perTask = BigInt(
-        try confVal.toLong.max(1L)
-        catch {
-          case _: NumberFormatException => throw new IllegalArgumentException(
-            s"spark.graft.spread.bytesPerTask must be a long, got '$confVal'")
-        })
+      val perTask = BigInt(graft.GraftConf
+        .long(df.sparkSession, "spark.graft.spread.bytesPerTask", perTaskBytes).max(1L))
       val width = ((size + perTask - 1) / perTask).min(BigInt(target)).max(BigInt(2)).toInt
       df.repartition(width, keys: _*)
     }

@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
@@ -106,16 +105,16 @@ object Snapshots {
     * sort+limit as TakeOrderedAndProject — no global sort materialized. */
   def leaderboard(events: DataFrame, topK: Int = 1000): DataFrame = {
     val snap = dailySnapshot(events)
-    val w = Window.orderBy(col("value").desc, col("user_id").asc)
-    snap
+    val order = Seq(col("value").desc, col("user_id").asc)
+    // sort+limit FIRST: plans as TakeOrderedAndProject (per-partition
+    // top-K + merge), so the rank below only ever numbers <= topK rows,
+    // already sorted on one partition: no exchange, no sort, no window.
+    val top = snap
       .join(endDay(snap), col("day") === col("end_day"))
       .select(col("user_id"), col("value"))
-      // sort+limit FIRST: plans as TakeOrderedAndProject (per-partition
-      // top-K + merge), so the rank window below only ever sees <= topK
-      // rows — never a single-partition sort of the full user set.
-      .orderBy(col("value").desc, col("user_id").asc)
+      .orderBy(order: _*)
       .limit(topK)
-      .withColumn("rank", row_number().over(w).cast("long"))
+    RankUtils.globalRowNumber(top, order, "rank")
       .withColumn("points", lit(1001L) - col("rank"))
       .select("rank", "user_id", "value", "points")
       .orderBy("rank")

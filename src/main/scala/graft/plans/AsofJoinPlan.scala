@@ -43,7 +43,7 @@ case class AsofJoinNode(
 }
 
 /** Plans [[AsofJoinNode]] as [[AsofJoinExec]]; inject via
-  * `spark.experimental.extraStrategies` or SparkSessionExtensions. */
+  * [[graft.GraftFunctions.installStrategy]] or SparkSessionExtensions. */
 object AsofJoinStrategy extends org.apache.spark.sql.execution.SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case j: AsofJoinNode =>
@@ -51,13 +51,6 @@ object AsofJoinStrategy extends org.apache.spark.sql.execution.SparkStrategy {
         planLater(j.left), planLater(j.right)) :: Nil
     case _ => Nil
   }
-
-  /** Live-session injection (idempotent) — the extraStrategies twin of
-    * [[graft.GraftExtensions]]'s injectPlannerStrategy. */
-  def install(spark: org.apache.spark.sql.SparkSession): Unit =
-    if (!spark.experimental.extraStrategies.contains(AsofJoinStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ AsofJoinStrategy
 }
 
 case class AsofJoinExec(

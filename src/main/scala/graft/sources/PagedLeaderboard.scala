@@ -24,9 +24,11 @@ import org.apache.spark.unsafe.types.UTF8String
   * scan builder accepts `level >= X` filter pushdown and LIMIT pushdown,
   * and plans only the page partitions that can contain qualifying rows
   * (level is monotonically non-increasing in rank, exactly like the real
-  * leaderboard). Each page is one [[InputPartition]], so a cluster fetches
-  * pages in parallel — the Spark-native replacement for the reference's
-  * sequential 500 ms-per-page loop.
+  * leaderboard). Contiguous page ranges are packed into at most one
+  * [[InputPartition]] per slot, so a cluster fetches pages in parallel —
+  * the Spark-native replacement for the reference's sequential
+  * 500 ms-per-page loop — without one task (and one written file
+  * downstream) per 50-row page.
   *
   * TWO page-payload paths share every plan-side mechanism (pushdown,
   * pruning, partitioning):
@@ -74,7 +76,7 @@ object PagedLeaderboard {
     else if (minLevel <= 8) Int.MaxValue
     else (BaseLevel - minLevel) * 10 + 10
 
-  /** Pages "fetched" — incremented per partition read; tests assert the
+  /** Pages "fetched" — incremented per page read; tests assert the
     * pushdown actually pruned the fetch count. */
   val pagesFetched = new AtomicLong(0L)
 
@@ -196,38 +198,52 @@ class PagedScan(maxPages: Int, minLevel: Option[Int], limit: Option[Int],
     val byLevel = minLevel.map(l => ceilPages(lastQualifyingRank(l).toLong))
       .getOrElse(Long.MaxValue)
     val byLimit = limit.map(n => ceilPages(n.toLong)).getOrElse(Long.MaxValue)
-    val pages = Seq(maxPages.toLong, byLevel, byLimit).min.max(0L).toInt
-    (1 to pages).map(p => PagePartition(p): InputPartition).toArray
+    val pages = Seq(maxPages.toLong, byLevel, byLimit).min.max(0L)
+    val slots = org.apache.spark.sql.SparkSession.active.sparkContext.defaultParallelism
+    val n = math.min(pages, math.max(slots, 1).toLong)
+    (0L until n).map(i => PageRange((i * pages / n + 1).toInt, ((i + 1) * pages / n).toInt))
+      .toArray[InputPartition]
   }
 
   override def createReaderFactory(): PartitionReaderFactory = new PagedReaderFactory(baseUrl)
 }
 
-case class PagePartition(page: Int) extends InputPartition
+/** Pages `first..last` (inclusive), read in rank order by one task. */
+case class PageRange(first: Int, last: Int) extends InputPartition
 
 class PagedReaderFactory(baseUrl: Option[String] = None) extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-    new PageReader(partition.asInstanceOf[PagePartition].page, baseUrl)
+  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
+    val r = partition.asInstanceOf[PageRange]
+    new PageReader(r.first, r.last, baseUrl)
+  }
 }
 
-/** One page = one partition read. With `baseUrl` set this is LIVE
-  * ingestion: a real HTTP GET + JSON parse per page ([[PagedLeaderboard
-  * .fetchPage]]); without it, the deterministic synthetic generator
-  * serves the same rows — both paths produce identical data for the
-  * fixture server, which is what lets the HTTP path share the synthetic
-  * path's DuckDB oracle. */
-class PageReader(page: Int, baseUrl: Option[String] = None)
+/** One page range = one partition read, page by page: a page is fetched
+  * only once the previous one is exhausted, so a LIMIT that stops reading
+  * stops fetching. With `baseUrl` set this is LIVE ingestion: a real HTTP
+  * GET + JSON parse per page ([[PagedLeaderboard.fetchPage]]); without it,
+  * the deterministic synthetic generator serves the same rows — both
+  * paths produce identical data for the fixture server, which is what
+  * lets the HTTP path share the synthetic path's DuckDB oracle. */
+class PageReader(first: Int, last: Int, baseUrl: Option[String] = None)
     extends PartitionReader[InternalRow] {
   import PagedLeaderboard._
+  private var page = first - 1
   private var i = -1
-  PagedLeaderboard.pagesFetched.incrementAndGet() // one (real or modeled) GET per page
+  private var rows = 0
+  private var fetched: Option[IndexedSeq[(Int, String, Int, Long, String, String)]] = None
 
-  private val fetched: Option[IndexedSeq[(Int, String, Int, Long, String, String)]] =
-    baseUrl.map(PagedLeaderboard.fetchPage(_, page))
-
-  private def rows: Int = fetched.map(_.length).getOrElse(PageSize)
-
-  override def next(): Boolean = { i += 1; i < rows }
+  override def next(): Boolean = {
+    i += 1
+    while (i >= rows && page < last) {
+      page += 1
+      i = 0
+      PagedLeaderboard.pagesFetched.incrementAndGet() // one (real or modeled) GET per page
+      fetched = baseUrl.map(PagedLeaderboard.fetchPage(_, page))
+      rows = fetched.map(_.length).getOrElse(PageSize)
+    }
+    i < rows
+  }
 
   override def get(): InternalRow = fetched match {
     case Some(es) =>

@@ -39,6 +39,16 @@ class PagedLeaderboardSpec extends SparkSpec {
     assert(r100.getAs[String]("name") === "char_100")
   }
 
+  test("pages pack into at most one partition per slot; rows come back in rank order") {
+    PagedLeaderboard.pagesFetched.set(0)
+    val df = read().filter(col("level") >= 30)
+    val parts = df.queryExecution.toRdd.getNumPartitions
+    assert(parts <= spark.sparkContext.defaultParallelism, s"$parts partitions for 95 pages")
+    assert(parts > 1, "95 pages must still spread over the slots")
+    assert(df.select("rank").collect().map(_.getInt(0)).toSeq === (1 to 4710))
+    assert(PagedLeaderboard.pagesFetched.get() === 95)
+  }
+
   test("filter semantics unaffected by pruning (Spark re-applies residuals)") {
     val a = read(maxPages = 10).filter(col("level") >= 495 && col("vocation") === "None")
       .count()
